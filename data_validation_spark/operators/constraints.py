@@ -20,7 +20,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from data_validation_spark.plans.suite import (
@@ -156,21 +156,21 @@ def uniqueness_violation_counts(df: DataFrame, keys: list[str],
     return {r["partition"]: int(r["n"]) for r in rows}
 
 
-def referential_violation_counts(df: DataFrame, column: str, dim: DataFrame,
-                                 partition_cols: list[str],
-                                 dim_column: str | None = None
-                                 ) -> dict[str, int]:
-    """Per-partition count of rows whose key is absent from the
-    dimension — counts-only sibling of ``referential_violations``
-    (pruned scan, broadcast anti-join, no payload columns)."""
-    dim_column = dim_column or column
-    cols = list(dict.fromkeys([column, *partition_cols]))
-    slim = df.select(*cols)
-    dim_keys = dim.select(F.col(dim_column).alias(column)).distinct()
-    rows = (slim.join(F.broadcast(dim_keys), on=column, how="left_anti")
-            .groupBy(partition_label_col(partition_cols).alias("partition"))
-            .agg(F.count(F.lit(1)).alias("n")).collect())
-    return {r["partition"]: r["n"] for r in rows}
+def frame_counts(violations: DataFrame) -> dict[str, int]:
+    """Per-partition row count of a violation frame.  Only the
+    partition label is projected before the count, so Catalyst prunes
+    the payload columns out of the scan."""
+    return {r["partition"]: r["n"] for r in
+            violations.groupBy("partition")
+            .agg(F.count(F.lit(1)).alias("n")).collect()}
+
+
+def referential_violation_counts(violations: DataFrame) -> dict[str, int]:
+    """Per-partition count of a ``referential_violations`` frame: the
+    optimized plan scans only (column, partition cols) and keeps the
+    broadcast anti-join.  A named step of its own so the anti-join's
+    stages can be attributed (perfbench/trace.py times it by name)."""
+    return frame_counts(violations)
 
 
 def row_level_violations(df: DataFrame, constraints: list[Constraint],
@@ -190,17 +190,14 @@ def uniqueness_violations(df: DataFrame, keys: list[str],
                           constraint_name: str = "unique") -> DataFrame:
     """S8 — explicit two-phase distinct count on the key.
 
-    Phase 1 groups by (keys, spark_partition_id): identical hot keys are
-    split across input partitions, so phase-1 reducers see bounded
-    groups.  Phase 2 sums the partial counts per key (tiny — one row per
-    distinct key per input split).  Keys with total > 1 are duplicated;
-    the violation rows are the original rows semi-joined on those keys.
+    The duplicated keys come from ``duplicate_key_counts``: phase 1
+    groups by (keys, spark_partition_id), so identical hot keys are
+    split across input partitions and phase-1 reducers see bounded
+    groups; phase 2 sums the partial counts per key (tiny — one row per
+    distinct key per input split).  The violation rows are the original
+    rows semi-joined on those keys.
     """
-    partial = (df.select(*keys)
-               .withColumn("__split", F.spark_partition_id())
-               .groupBy(*keys, "__split").agg(F.count(F.lit(1)).alias("__c")))
-    dup_keys = (partial.groupBy(*keys).agg(F.sum("__c").alias("__n"))
-                .filter(F.col("__n") > 1).select(*keys))
+    dup_keys = duplicate_key_counts(df, keys).select(*keys)
     return (df.join(dup_keys, on=keys, how="left_semi")
             .withColumn("errors", F.array(F.lit(constraint_name)))
             .withColumn("partition", partition_label_col(partition_cols)))
@@ -208,10 +205,11 @@ def uniqueness_violations(df: DataFrame, keys: list[str],
 
 def duplicate_key_counts(df: DataFrame, keys: list[str]) -> DataFrame:
     """Key-level uniqueness report: ``(keys..., n_rows)`` for every key
-    occurring more than once — the same salted two-phase plan as
-    ``uniqueness_violations`` but WITHOUT the row-retrieval semi-join:
-    phase 2 already holds each key's total multiplicity, so recounting
-    via a join back is a full extra pass over the table.  At 10^12
+    occurring more than once — the salted two-phase plan that
+    ``uniqueness_violations`` semi-joins back to the rows.  On its own
+    it skips that row retrieval: phase 2 already holds each key's total
+    multiplicity, so recounting via a join back is a full extra pass
+    over the table.  At 10^12
     rows the key-level report is the thing you look at first; fetch
     actual rows (``uniqueness_violations``) only for keys you will act
     on."""
@@ -316,56 +314,12 @@ def evaluate_constraints(df: DataFrame, suite: ValidationSuite,
     instead inline ``params["values"]``.  Drift constraints are profile-
     level and handled by operators/contrast.py + plans/runner.py.
     """
-    dims = dims or {}
     pcols = suite.partition_cols
-    frames: list[DataFrame] = []
-    names: list[str] = []
-
     constraints = suite.resolved_constraints()
-    row_cs = [c for c in constraints if c.kind in ROW_LEVEL_KINDS]
-    if row_cs:
-        frames.append(row_level_violations(df, row_cs, pcols))
-        names += [c.name for c in row_cs]
-
-    comp_cs = [c for c in constraints if c.kind == "completeness"]
-    for name, frame in completeness_violation_frames(df, comp_cs, pcols):
-        frames.append(frame)
-        names.append(name)
-
-    for c in constraints:
-        if c.kind == "unique":
-            frames.append(uniqueness_violations(
-                _scoped_df(df, c), list(c.params["keys"]), pcols, c.name))
-            names.append(c.name)
-        elif c.kind == "fd":
-            frames.append(fd_violation_frame(_scoped_df(df, c), c, pcols))
-            names.append(c.name)
-        elif c.kind == "join_rule":
-            frames.append(join_rule_violation_frame(
-                _scoped_df(df, c), c, dims, pcols))
-            names.append(c.name)
-        elif c.kind == "referential":
-            p = c.params
-            if "values" in p:
-                spark = df.sparkSession
-                dim = spark.createDataFrame(
-                    [(v,) for v in p["values"]], f"{p['column']} string")
-            else:
-                dim = dims[p["dim"]]
-            frames.append(referential_violations(
-                _scoped_df(df, c), p["column"], dim, pcols,
-                p.get("dim_column"), c.name))
-            names.append(c.name)
-
+    names = [c.name for c in constraints
+             if c.kind in ROW_LEVEL_KINDS + SET_LEVEL_KINDS]
+    violations = violation_rows(df, constraints, pcols, dims)
     spark = df.sparkSession
-    if frames:
-        violations = frames[0]
-        for f in frames[1:]:
-            violations = violations.unionByName(f, allowMissingColumns=True)
-    else:
-        violations = (df.limit(0)
-                      .withColumn("errors", F.array(F.lit("")))
-                      .withColumn("partition", partition_label_col(pcols)))
 
     # verdict universe: every (partition × constraint), so partitions with
     # zero violations still get an explicit passed=true row
@@ -418,8 +372,7 @@ def completeness_violation_frames(df: DataFrame, comp_cs: list[Constraint],
     single row — the lazy set-level trick: NULL rows are flagged only
     when their column's table-level ratio breaks min_ratio; when every
     assertion holds the filters are statically empty, and no driver
-    action runs.  Returns ``(constraint name, violation frame)`` pairs
-    (shared by evaluate_constraints and run_validation)."""
+    action runs.  Returns ``(constraint, violation frame)`` pairs."""
     if not comp_cs:
         return []
     exprs = {c.name: F.expr((c.params["expr"] if "expr" in c.params else c.params["component"]))
@@ -443,7 +396,7 @@ def completeness_violation_frames(df: DataFrame, comp_cs: list[Constraint],
     for i, c in enumerate(comp_cs):
         null_in_scope = exprs[c.name].isNull() if scopes[c.name] is None \
             else (scopes[c.name] & exprs[c.name].isNull())
-        out.append((c.name,
+        out.append((c,
                     with_r.filter(
                         (F.col(f"__r_{i}")
                          < F.lit(float(c.params["min_ratio"])))
@@ -480,22 +433,86 @@ def join_rule_violation_frame(df: DataFrame, c: Constraint,
     (alias in the dim frame); violations keep df's columns only so the
     frame shape matches every other kind."""
     p = c.params
-    if not dims or p["dim"] not in dims:
-        raise ValueError(
-            f"join_rule constraint {c.name!r}: dimension {p['dim']!r} "
-            f"not provided in dims (got: {sorted(dims or {})})")
+    dim = resolve_dim(df.sparkSession, c, dims)
     # dims share referential's contract: broadcast-sized by definition
     # (the fact table is the 10^12-row side and must never shuffle for
     # a suite constraint; a table-scale "dimension" belongs in a
     # pre-bucketed upstream join, not here).  Explicit hint because
     # driver-built dims (createDataFrame → ExistingRDD) carry no stats
     # for the auto-broadcast threshold.
-    joined = df.join(F.broadcast(dims[p["dim"]]), on=list(p["on"]),
-                     how="left")
+    joined = df.join(F.broadcast(dim), on=list(p["on"]), how="left")
     return (joined.filter(~F.coalesce(F.expr(p["sql"]), F.lit(False)))
             .select(*df.columns)
             .withColumn("errors", F.array(F.lit(c.name)))
             .withColumn("partition", partition_label_col(pcols)))
+
+
+def resolve_dim(spark: SparkSession, c: Constraint,
+                dims: dict[str, DataFrame] | None) -> DataFrame:
+    """The dimension a referential or join_rule constraint checks
+    against: its inline ``params["values"]`` as a one-column frame, or
+    the frame ``dims`` holds under ``params["dim"]``.  A missing
+    dimension is a ValueError naming it, never a bare KeyError."""
+    p = c.params
+    if "values" in p:
+        return spark.createDataFrame([(v,) for v in p["values"]],
+                                     f"{p['column']} string")
+    if not dims or p["dim"] not in dims:
+        raise ValueError(
+            f"{c.kind} constraint {c.name!r}: dimension {p['dim']!r} "
+            f"not provided in dims (got: {sorted(dims or {})})")
+    return dims[p["dim"]]
+
+
+def set_level_violation_frames(df: DataFrame, constraints: list[Constraint],
+                               pcols: list[str],
+                               dims: dict[str, DataFrame] | None
+                               ) -> list[tuple[Constraint, DataFrame]]:
+    """``(constraint, violation frame)`` for every set-level constraint
+    — the one place a set-level kind maps to its plan.  Both entry
+    points build on it: ``evaluate_constraints`` and a sink run union
+    the frames into the violation rows; a no-sink ``run_validation``
+    counts each frame per partition.  ``where`` scopes filter before each
+    operator so the predicate pushes down to the scan."""
+    out = completeness_violation_frames(
+        df, [c for c in constraints if c.kind == "completeness"], pcols)
+    for c in constraints:
+        if c.kind not in ("unique", "referential", "fd", "join_rule"):
+            continue
+        p, scoped = c.params, _scoped_df(df, c)
+        if c.kind == "unique":
+            frame = uniqueness_violations(scoped, list(p["keys"]), pcols,
+                                          c.name)
+        elif c.kind == "referential":
+            frame = referential_violations(
+                scoped, p["column"], resolve_dim(df.sparkSession, c, dims),
+                pcols, p.get("dim_column"), c.name)
+        elif c.kind == "fd":
+            frame = fd_violation_frame(scoped, c, pcols)
+        else:
+            frame = join_rule_violation_frame(scoped, c, dims, pcols)
+        out.append((c, frame))
+    return out
+
+
+def violation_rows(df: DataFrame, constraints: list[Constraint],
+                   pcols: list[str],
+                   dims: dict[str, DataFrame] | None) -> DataFrame:
+    """Every violation row of the row- and set-level constraints:
+    original columns + ``partition`` + ``errors``.  Lazy; an empty
+    frame of the same shape when there is nothing to check."""
+    row_cs = [c for c in constraints if c.kind in ROW_LEVEL_KINDS]
+    frames = [row_level_violations(df, row_cs, pcols)] if row_cs else []
+    frames += [f for _, f in
+               set_level_violation_frames(df, constraints, pcols, dims)]
+    if not frames:
+        return (df.limit(0)
+                .withColumn("errors", F.array(F.lit("")))
+                .withColumn("partition", partition_label_col(pcols)))
+    out = frames[0]
+    for f in frames[1:]:
+        out = out.unionByName(f, allowMissingColumns=True)
+    return out
 
 
 def functional_dependency_violations(df: DataFrame, determinant: list[str],

@@ -51,6 +51,7 @@ widen by an explicit epsilon instead).  Pair expectations honor GE's
 from __future__ import annotations
 
 import json
+import math
 from typing import Any
 
 from data_validation_spark.plans.suite import (
@@ -103,6 +104,11 @@ def _sql_lit(v: Any) -> str:
     against date/timestamp columns via Spark's implicit cast)."""
     if isinstance(v, bool):
         return "TRUE" if v else "FALSE"
+    if isinstance(v, float) and not math.isfinite(v):
+        # repr() would emit bare inf/nan, which Spark SQL cannot parse
+        raise ValueError(
+            f"strict GE bound {v!r} is not finite; drop the bound or "
+            "give a finite number")
     if isinstance(v, (int, float)):
         return repr(v)
     return "'" + str(v).replace("'", "''") + "'"

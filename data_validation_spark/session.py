@@ -14,17 +14,33 @@ import re
 
 from pyspark.sql import SparkSession
 
-#: local mode is one JVM: size its heap for 32 concurrent task threads
-#: scanning wide token arrays (sandbox has 128 GiB; on a cluster,
-#: executor memory comes from spark-submit instead)
-_DRIVER_MEM = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g")
+
+def _default_driver_mem() -> str:
+    """Local mode is one JVM, so its heap must fit the host it finds:
+    about 40% of ``MemAvailable`` in whole GiB (the rest stays free for
+    the Python workers and the page cache), capped at 24g.  A 15 GiB
+    host gets 6g; a 128 GiB host gets the 24g cap.  On a cluster,
+    executor memory comes from spark-submit instead.  Without
+    ``/proc/meminfo`` (non-Linux hosts) the heap is 4g."""
+    try:
+        with open("/proc/meminfo") as f:
+            kib = next(int(ln.split()[1]) for ln in f
+                       if ln.startswith("MemAvailable:"))
+    except (OSError, StopIteration, ValueError):
+        return "4g"
+    return f"{min(24, max(1, int(kib * 0.4) // (1024 * 1024)))}g"
+
+
+#: heap size; ``SPARK_GRAFT_DRIVER_MEM`` overrides the host-derived value
+_DRIVER_MEM = os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_mem()
 
 ENGINE_DEFAULTS = {
     "spark.driver.memory": _DRIVER_MEM,
-    # measured (tools/scale_probe*.py): WITHOUT a pinned pre-touched
-    # heap, array<int32>-heavy scans at 32 threads spend ~35% of CPU in
-    # the kernel zeroing freshly-faulted heap pages (lazy -Xms growth ×
-    # 4× allocation rate) — queries randomly degrade 10-30×.  Pinning
+    # measured (BASELINE.md, "Measured tuning findings"): WITHOUT a
+    # pinned pre-touched heap, array<int32>-heavy scans at 32 threads
+    # spend ~35% of CPU in the kernel zeroing freshly-faulted heap pages
+    # (lazy -Xms growth × 4× allocation rate) — queries randomly
+    # degrade 10-30×.  Pinning
     # -Xms to -Xmx with AlwaysPreTouch pre-zeroes the heap once at
     # startup and makes 32-thread runs stable and faster than 8-thread
     # runs.  GC choice and the nested vectorized reader were innocent

@@ -71,7 +71,7 @@ def test_validate_writes_markdown_report(spark, sequences, tmp_path,
         constraints=[Constraint("n_pos", "bounds",
                                 {"component": "n_tok", "min": 1}),
                      Constraint("uniq", "unique", {"keys": ["doc_id"]})])
-    res = run_validation(spark, sequences, suite, concurrent_jobs=1)
+    res = run_validation(spark, sequences, suite)
     md = render_markdown(res.profile, res.verdicts, res.drift,
                          title="rep")
     assert md.startswith("# rep — validation report")

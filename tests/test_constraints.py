@@ -328,15 +328,21 @@ def test_runner_rejects_unknown_constraint_kind(spark):
 
 
 def test_join_rule_missing_dim_is_descriptive(spark):
-    """ADVICE r3 (low): dims=None or a missing dimension name must be a
-    clear ValueError naming the dimension, not a bare TypeError."""
+    """dims=None or a missing dimension name must be a clear ValueError
+    naming the dimension — not a bare TypeError/KeyError — for every
+    kind that reads a dimension, through both entry points."""
+    from data_validation_spark.plans.runner import run_validation
     df = spark.createDataFrame([(1, 10)], "k long, user_id long")
-    suite = ValidationSuite(
-        name="jr", components=[Component("k", "numeric")],
-        constraints=[Constraint("r", "join_rule",
-                                {"dim": "signups", "on": ["user_id"],
-                                 "sql": "true"})])
-    with pytest.raises(ValueError, match="'signups' not provided"):
-        evaluate_constraints(df, suite)
-    with pytest.raises(ValueError, match="'signups' not provided"):
-        evaluate_constraints(df, suite, dims={"other": df})
+    for con in (Constraint("r", "join_rule",
+                           {"dim": "signups", "on": ["user_id"],
+                            "sql": "true"}),
+                Constraint("r", "referential",
+                           {"column": "user_id", "dim": "signups"})):
+        suite = ValidationSuite(
+            name="jr", components=[Component("k", "numeric")],
+            constraints=[con])
+        for dims in (None, {"other": df}):
+            with pytest.raises(ValueError, match="'signups' not provided"):
+                evaluate_constraints(df, suite, dims=dims)
+            with pytest.raises(ValueError, match="'signups' not provided"):
+                run_validation(spark, df, suite, dims=dims, resume=False)

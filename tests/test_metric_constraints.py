@@ -7,6 +7,7 @@ a breach is one failed verdict, missing evidence fails CLOSED."""
 import pytest
 
 from data_validation_spark.operators.constraints import (
+    SET_LEVEL_KINDS,
     as_of_micros,
     evaluate_constraints,
     metric_breach,
@@ -58,7 +59,7 @@ def test_pattern_rides_fused_pass_and_materializes_rows(spark, mdf,
     suite = _suite([Constraint("id_shape", "pattern",
                                {"component": "doc_id",
                                 "pattern": "^[a-z][0-9]+$"})])
-    res = run_validation(spark, mdf, suite, concurrent_jobs=1)
+    res = run_validation(spark, mdf, suite)
     assert _verdict(res, "source=api", "id_shape")["n_violations"] == 1
     assert _verdict(res, "source=web", "id_shape")["passed"]
 
@@ -73,7 +74,7 @@ def test_pattern_rides_fused_pass_and_materializes_rows(spark, mdf,
 def test_pattern_casts_non_string_values(spark, mdf):
     suite = _suite([Constraint("ntok_digit", "pattern",
                                {"component": "n_tok", "pattern": "^[12]$"})])
-    res = run_validation(spark, mdf, suite, concurrent_jobs=1)
+    res = run_validation(spark, mdf, suite)
     # web: n_tok 3 fails, 2 passes; api: 1,2,1 all pass
     assert _verdict(res, "source=web", "ntok_digit")["n_violations"] == 1
     assert _verdict(res, "source=api", "ntok_digit")["passed"]
@@ -84,7 +85,7 @@ def test_pattern_over_derived_component_uses_extractor(spark, mdf):
                                {"component": "len_tokens",
                                 "pattern": "^[123]$"})])
     # len_tokens extractor = size(tokens): lengths 3,2 / 1,2,1 — all match
-    res = run_validation(spark, mdf, suite, concurrent_jobs=1)
+    res = run_validation(spark, mdf, suite)
     assert all(v["passed"] for v in res.verdicts)
 
 
@@ -98,7 +99,7 @@ def test_stat_bounds_per_partition_from_profile(spark, mdf):
         Constraint("max_len", "stat_bounds",
                    {"component": "len_tokens", "stat": "max", "max": 10}),
     ])
-    res = run_validation(spark, mdf, suite, concurrent_jobs=1)
+    res = run_validation(spark, mdf, suite)
     # web mean 2.5 breaches [1,2]; api mean 4/3 passes
     assert not _verdict(res, "source=web", "mean_ntok")["passed"]
     assert _verdict(res, "source=api", "mean_ntok")["passed"]
@@ -118,7 +119,7 @@ def test_stat_bounds_missing_stat_fails_closed(spark):
                                 {"component": "x", "stat": "std",
                                  "max": 100.0})],
         partition_cols=["grp"])
-    res = run_validation(spark, df, suite, concurrent_jobs=1)
+    res = run_validation(spark, df, suite)
     assert _verdict(res, "grp=a", "x_std")["passed"]
     assert not _verdict(res, "grp=b", "x_std")["passed"]
 
@@ -134,7 +135,7 @@ def test_stat_bounds_pinv_and_n(spark):
             Constraint("x_n", "stat_bounds",
                        {"component": "x", "stat": "n", "min": 4, "max": 4}),
         ])
-    res = run_validation(spark, df, suite, concurrent_jobs=1)
+    res = run_validation(spark, df, suite)
     # pinv = 2/4 (NULL + NaN both invalid) > 0.4 → breach; n = 4 exact
     assert not _verdict(res, "<global>", "x_pinv")["passed"]
     assert _verdict(res, "<global>", "x_n")["passed"]
@@ -145,7 +146,7 @@ def test_stat_bounds_pinv_and_n(spark):
 def test_row_count_bounds(spark, mdf):
     suite = _suite([Constraint("big_enough", "row_count", {"min": 3}),
                     Constraint("not_huge", "row_count", {"max": 2})])
-    res = run_validation(spark, mdf, suite, concurrent_jobs=1)
+    res = run_validation(spark, mdf, suite)
     assert not _verdict(res, "source=web", "big_enough")["passed"]  # 2 < 3
     assert _verdict(res, "source=api", "big_enough")["passed"]      # 3
     assert _verdict(res, "source=web", "not_huge")["passed"]
@@ -156,7 +157,7 @@ def test_freshness_verdicts_and_as_of_forms(spark, mdf):
     iso = Constraint("fresh", "freshness",
                      {"component": "day", "max_age_seconds": 86400 * 40,
                       "as_of": "2026-02-01T00:00:00"})
-    res = run_validation(spark, mdf, _suite([iso]), concurrent_jobs=1)
+    res = run_validation(spark, mdf, _suite([iso]))
     assert _verdict(res, "source=web", "fresh")["passed"]   # 2026-01-06
     assert not _verdict(res, "source=api", "fresh")["passed"]  # 2025-06-03
 
@@ -186,7 +187,7 @@ def test_distinctness_metrics_and_null_as_value(spark):
         Constraint("ur", "distinctness",
                    {**base, "metric": "unique_ratio", "min": 0.3}),
     ])
-    res = run_validation(spark, df, suite, concurrent_jobs=1)
+    res = run_validation(spark, df, suite)
     # values: k1×2, k2×1, NULL×2 → distinct 3/5 = 0.6 < 0.7 breach;
     # exactly-once 1/5 = 0.2 < 0.3 breach — NULLs must NOT read unique
     assert not _verdict(res, "<global>", "dr")["passed"]
@@ -196,11 +197,11 @@ def test_distinctness_metrics_and_null_as_value(spark):
         Constraint("dr2", "distinctness",
                    {**base, "metric": "distinct_ratio", "min": 0.5}),
     ])
-    res2 = run_validation(spark, df, ok, concurrent_jobs=1)
+    res2 = run_validation(spark, df, ok)
     assert _verdict(res2, "<global>", "dr2")["passed"]
 
 
-# -- parity + concurrency ----------------------------------------------------
+# -- parity ------------------------------------------------------------------
 
 def _full_suite():
     return _suite([
@@ -219,25 +220,59 @@ def _full_suite():
     ])
 
 
-def test_runner_and_evaluate_constraints_agree(spark, mdf):
-    suite = _full_suite()
-    res = run_validation(spark, mdf, suite, concurrent_jobs=1)
-    run = evaluate_constraints(mdf, suite)
-    ev = sorted(((r["partition"], r["constraint"], int(r["n_violations"]),
-                  r["passed"]) for r in run.verdicts.collect()))
-    rv = sorted((v["partition"], v["constraint"], int(v["n_violations"]),
-                 v["passed"]) for v in res.verdicts)
-    assert ev == rv
+def _set_level_case(spark):
+    """One constraint of every set-level kind, each failing somewhere;
+    referential sits on both sides of the runner's 10,000-value inline
+    limit (folded into the fused pass vs the broadcast anti-join)."""
+    suite = _suite([
+        Constraint("uniq", "unique", {"keys": ["doc_id"]}),
+        Constraint("ref_inline", "referential",
+                   {"column": "doc_id", "dim": "small"}),
+        Constraint("ref_antijoin", "referential",
+                   {"column": "doc_id", "dim": "big"}),
+        Constraint("fd_src", "fd",
+                   {"determinant": ["doc_id"], "dependent": "source"}),
+        Constraint("id_complete", "completeness",
+                   {"component": "doc_id", "min_ratio": 0.9}),
+        Constraint("min_tok", "join_rule",
+                   {"dim": "srcs", "on": ["source"],
+                    "sql": "n_tok >= min_tok"}),
+    ])
+    dims = {"small": spark.createDataFrame([("d1",)], "doc_id string"),
+            "big": spark.range(10_001)
+            .selectExpr("concat('d', id) AS doc_id"),
+            "srcs": spark.createDataFrame([("web", 2)],
+                                          "source string, min_tok int")}
+    return suite, dims
 
 
-def test_concurrent_jobs_identical_verdicts(spark, mdf):
-    suite = _full_suite()
-    key = lambda v: (v["partition"], v["constraint"])  # noqa: E731
-    serial = sorted(run_validation(spark, mdf, suite,
-                                   concurrent_jobs=1).verdicts, key=key)
-    pooled = sorted(run_validation(spark, mdf, suite,
-                                   concurrent_jobs=4).verdicts, key=key)
-    assert serial == pooled
+@pytest.mark.parametrize("case", ["metric", "set_level"])
+def test_runner_and_evaluate_constraints_agree(spark, mdf, tmp_path, case):
+    """evaluate_constraints, run_validation without a sink (counts) and
+    run_validation with a sink (violation rows) give identical
+    verdicts."""
+    if case == "metric":
+        suite, dims = _full_suite(), None
+    else:
+        suite, dims = _set_level_case(spark)
+        assert ({c.kind for c in suite.constraints}
+                == set(SET_LEVEL_KINDS))
+
+    def rows(verdicts):
+        return sorted((v["partition"], v["constraint"],
+                       int(v["n_violations"]), v["passed"])
+                      for v in verdicts)
+
+    ev = rows(evaluate_constraints(mdf, suite, dims=dims)
+              .verdicts.collect())
+    plain = rows(run_validation(spark, mdf, suite, dims=dims).verdicts)
+    sunk = rows(run_validation(spark, mdf, suite, dims=dims,
+                               sink=TableProvider(spark, str(tmp_path)))
+                .verdicts)
+    assert ev == plain == sunk
+    if case == "set_level":
+        assert ({name for _, name, n, _ in ev if n}
+                == {c.name for c in suite.constraints})
 
 
 def test_expr_only_constraints_no_component_key(spark, mdf):
@@ -251,7 +286,7 @@ def test_expr_only_constraints_no_component_key(spark, mdf):
                     "max_age_seconds": 86400 * 40,
                     "as_of": "2026-02-01T00:00:00"}),
     ])
-    res = run_validation(spark, mdf, suite, concurrent_jobs=1)
+    res = run_validation(spark, mdf, suite)
     assert _verdict(res, "source=web", "len_pat")["passed"]
     assert not _verdict(res, "source=api", "fresh_expr")["passed"]
 
@@ -328,7 +363,7 @@ def test_ordering_kind_per_partition_verdicts(spark):
                        {"key": "u", "arrival": "arr", "component": "ts",
                         "max_lateness_seconds": 40}),
         ])
-    res = run_validation(spark, df, suite, concurrent_jobs=1)
+    res = run_validation(spark, df, suite)
     # p1: late_micro = 333333 (1/3) > 0.25 -> fail; <= 0.5 -> pass;
     # max 50s > 40s cap -> fail.  p2: everything passes.
     assert not _verdict(res, "part=p1", "mostly_ordered")["passed"]
@@ -355,7 +390,7 @@ def test_ordering_kind_where_scope_and_preflight(spark):
                                  "component": "ts",
                                  "max_late_ratio": 0.0,
                                  "where": "arr <= 2"})])
-    res = run_validation(spark, df, suite, concurrent_jobs=1)
+    res = run_validation(spark, df, suite)
     assert all(v["passed"] for v in res.verdicts)
 
     bad = ValidationSuite(

@@ -119,7 +119,7 @@ def test_regression_end_to_end_with_runner(spark, tmp_path):
     for i in range(4):
         df = base if i < 3 else base.withColumn("v", F.col("v") + 1000)
         run_validation(spark, df, suite, sink=sink, resume=False,
-                       run_id=f"r{i}", concurrent_jobs=1)
+                       run_id=f"r{i}")
     rep = metrics_regression_report(
         sink.read(METRICS_TABLE).where(F.col("component") == "v"),
         min_history=3, min_deviation=1.0)

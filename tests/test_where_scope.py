@@ -57,7 +57,7 @@ def test_row_level_scope_ignores_out_of_scope_breaches(spark, wdf):
     suite = _suite([Constraint("val_hi", "bounds",
                                {"component": "val", "max": 10,
                                 "where": "grp = 'a'"})])
-    res = run_validation(spark, wdf, suite, concurrent_jobs=1)
+    res = run_validation(spark, wdf, suite)
     # only a2 (50) — b1's 500 is out of scope
     assert _verdict(res, "val_hi")["n_violations"] == 1
 
@@ -68,7 +68,7 @@ def test_row_level_scope_ignores_out_of_scope_breaches(spark, wdf):
 def test_unique_scope_counts_dups_within_scope_only(spark, wdf):
     suite = _suite([Constraint("key_uniq", "unique",
                                {"keys": ["key"], "where": "grp = 'a'"})])
-    res = run_validation(spark, wdf, suite, concurrent_jobs=1)
+    res = run_validation(spark, wdf, suite)
     # k4 appears once in scope (its other row is grp='b'); k5 twice in
     # scope -> exactly the two k5 rows
     assert _verdict(res, "key_uniq")["n_violations"] == 2
@@ -84,7 +84,7 @@ def test_referential_scope_inline_and_antijoin_paths(spark, wdf):
     # catalyst path inlines the dim as an isin condition; kernel path
     # keeps the anti-join — both must honor the scope (only a4's BADX;
     # b2's BAD is out of scope)
-    res = run_validation(spark, wdf, _suite([con]), concurrent_jobs=1)
+    res = run_validation(spark, wdf, _suite([con]))
     assert _verdict(res, "src_ok")["n_violations"] == 1
     run = evaluate_constraints(wdf, _suite([con]))
     assert [r["doc_id"] for r in run.violations.collect()] == ["a4"]
@@ -115,7 +115,7 @@ def test_row_count_floor_on_slice(spark, wdf):
         Constraint("c_floor", "row_count", {"min": 1,
                                             "where": "grp = 'c'"}),
     ])
-    res = run_validation(spark, wdf, suite, concurrent_jobs=1)
+    res = run_validation(spark, wdf, suite)
     assert not _verdict(res, "b_floor3")["passed"]   # 2 < 3
     assert _verdict(res, "b_floor2")["passed"]
     # empty slice measures 0 (a real measurement, not missing evidence)
@@ -129,7 +129,7 @@ def test_stat_bounds_scoped_mean_uses_metric_scan(spark, wdf):
                                {"component": "val", "stat": "mean",
                                 "min": 10, "max": 20,
                                 "where": "grp = 'a'"})])
-    res = run_validation(spark, wdf, suite, concurrent_jobs=1)
+    res = run_validation(spark, wdf, suite)
     assert _verdict(res, "a_mean")["passed"]
 
 
@@ -140,7 +140,7 @@ def test_freshness_judged_over_scope(spark, wdf):
         Constraint("a_fresh", "freshness", {**p, "where": "grp = 'a'"}),
         Constraint("b_fresh", "freshness", {**p, "where": "grp = 'b'"}),
     ])
-    res = run_validation(spark, wdf, suite, concurrent_jobs=1)
+    res = run_validation(spark, wdf, suite)
     assert _verdict(res, "a_fresh")["passed"]        # max 2026-01-09
     assert not _verdict(res, "b_fresh")["passed"]    # max 2020-01-02
 
@@ -150,11 +150,11 @@ def test_distinctness_over_scope(spark, wdf):
     suite = _suite([Constraint("key_distinct", "distinctness",
                                {"columns": ["key"], "min": 0.75,
                                 "where": "grp = 'a'"})])
-    res = run_validation(spark, wdf, suite, concurrent_jobs=1)
+    res = run_validation(spark, wdf, suite)
     assert _verdict(res, "key_distinct")["passed"]
     unscoped = _suite([Constraint("key_distinct", "distinctness",
                                   {"columns": ["key"], "min": 0.75})])
-    res2 = run_validation(spark, wdf, unscoped, concurrent_jobs=1)
+    res2 = run_validation(spark, wdf, unscoped)
     assert not _verdict(res2, "key_distinct")["passed"]
 
 
@@ -213,7 +213,7 @@ def test_runner_and_evaluate_agree_on_scoped_suite(spark, wdf):
                    {"columns": ["key"], "min": 0.75,
                     "where": "grp = 'a'"}),
     ])
-    res = run_validation(spark, wdf, suite, concurrent_jobs=1)
+    res = run_validation(spark, wdf, suite)
     run = evaluate_constraints(wdf, suite)
     ev = sorted(((r["partition"], r["constraint"], int(r["n_violations"]),
                   r["passed"]) for r in run.verdicts.collect()))
@@ -247,5 +247,5 @@ def test_conditional_fd_via_where_scope(spark):
     # violates nor poisons US 10001
     assert sorted((r.zip, r.city) for r in viol) \
         == [("99999", "A"), ("99999", "B")]
-    res = run_validation(spark, df, suite, concurrent_jobs=1)
+    res = run_validation(spark, df, suite)
     assert _verdict(res, "zip_city_cfd")["n_violations"] == 2
